@@ -557,142 +557,34 @@ def winnow_pairs_from_fingerprints(
 # ---------------- duplicate clusters (connected components) ----------------
 
 
-def _star_contract(edges: DataFrame, max_iters: int) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14): the
-    O(log n)-round CC algorithm, vs O(component diameter) for plain
-    min-label propagation.
-
-    ``edges``: canonical undirected edge list (hi, lo) with hi > lo,
-    distinct, no self-loops. Returns the converged star set — every
-    surviving edge is (node, component_min).
-
-    - large-star: every neighbor LARGER than u re-attaches to u's
-      neighborhood minimum — long chains halve.
-    - small-star: every neighbor ≤ u (canonical-form group) attaches
-      to the group minimum — stars flatten.
-
-    Both phases preserve connectivity (the paper's invariant); each is
-    one keyed groupBy + one keyed join, so a round costs the same
-    shuffles as one propagation step but makes exponential progress.
-    Convergence is detected by an order-insensitive edge-set checksum.
-    """
-    prev_sig = None
-    for _ in range(max_iters):
-        # large-star over the symmetrized adjacency: m(u) = min
-        # neighborhood label; emit (v, m(u)) for v > u. m(u) <= u < v
-        # keeps the output canonical with no self-loops.
-        sym = edges.unionAll(
-            edges.select(F.col("lo").alias("hi"), F.col("hi").alias("lo"))
-        )
-        m = sym.groupBy("hi").agg(
-            F.least(F.first("hi"), F.min("lo")).alias("mn")
-        )
-        large = (
-            sym.join(m, "hi")
-            .filter(F.col("lo") > F.col("hi"))
-            .select(F.col("lo").alias("hi"), F.col("mn").alias("lo"))
-            .distinct()
-        )
-        # small-star on canonical edges: all stored neighbors of hi are
-        # < hi; attach hi and every such neighbor to their minimum.
-        sm = large.groupBy("hi").agg(F.min("lo").alias("mn"))
-        small = (
-            large.join(sm, "hi")
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("hi"), F.col("mn").alias("lo")),
-                        F.struct(F.col("lo").alias("hi"), F.col("mn").alias("lo")),
-                    )
-                ).alias("e")
-            )
-            .select("e.hi", "e.lo")
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-            .localCheckpoint()  # cut lineage: plans must not snowball
-        )
-        sig = small.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: full-range xxhash64 longs overflow a LongType
-            # sum under ANSI; decimal(38,0) holds ~1e19 of them
-            F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        edges = small
-        if prev_sig == (sig.n, sig.h):
-            break
-        prev_sig = (sig.n, sig.h)
-    return edges
-
-
 def duplicate_clusters(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    max_iters: int = 20,
-    method: str = "propagate",
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph → one
     cluster per transitive duplicate group: (doc_id, cluster_id,
     is_canonical), cluster_id = min doc id in the component, canonical
     = that min doc (the keep-one-of-each-cluster dedup decision).
 
-    ``method="propagate"`` (default): iterative min-label propagation
-    — each node adopts the smallest label among itself and its
-    neighbors until fixpoint; O(component diameter) rounds with ONE
-    join + groupBy per round. Near-dup graphs are shallow (members of
-    a cluster all share content, so almost every pair edge exists and
-    diameters stay small), which makes this the cheaper production
-    path: measured on the sf0.1 MinHash pair graph, propagation ≈2.3 s
-    vs star ≈4.6 s (star pays double the shuffles per round and its
-    log-round advantage never engages at diameter ≲3).
-    ``method="star"``: alternating large-star/small-star contraction —
-    O(log n) rounds (see ``_star_contract``), the right shape when a
-    skewed corpus produces LONG duplicate chains (transcript dumps,
-    boilerplate gradients): a planted 64-link chain converges within
-    8 rounds where propagation needs 64. Property-tested equivalent to
-    propagation on random graphs.
+    Iterative min-label propagation: each node adopts the smallest
+    label among itself and its neighbors until fixpoint — O(component
+    diameter) rounds with ONE join + groupBy per round. Near-dup graphs
+    are shallow (members of a cluster all share content, so almost
+    every pair edge exists and diameters stay small), so the round
+    count stays small in practice: measured on the sf0.1 MinHash pair
+    graph, propagation ≈2.3 s vs ≈4.6 s for a large-star/small-star
+    contraction (Kiveris et al., SoCC'14), whose log-round advantage
+    never engages at diameter ≲3.
 
-    Both are pure DataFrame ops, lineage cut with localCheckpoint each
-    round so plans don't snowball; the driver loop iterates ROUNDS,
-    never rows.
+    Runs to the TRUE fixpoint with no round cap (the k_core rule: never
+    return a non-fixpoint — a capped loop would silently split a long
+    chain into several clusters). Termination: labels are integers that
+    only decrease, and every non-converged round lowers at least one.
+
+    Pure DataFrame ops, lineage cut with localCheckpoint each round so
+    plans don't snowball; the driver loop iterates ROUNDS, never rows.
     """
-    if method not in ("propagate", "star"):
-        raise ValueError(
-            f"method must be 'propagate' or 'star', got {method!r}"
-        )
-    if method == "star":
-        canon = (
-            pairs.select(
-                F.greatest(
-                    F.col(a_col).cast("long"), F.col(b_col).cast("long")
-                ).alias("hi"),
-                F.least(
-                    F.col(a_col).cast("long"), F.col(b_col).cast("long")
-                ).alias("lo"),
-            )
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-            .localCheckpoint()
-        )
-        stars = _star_contract(canon, max_iters)
-        members = stars.groupBy(F.col("hi").alias("doc_id")).agg(
-            F.min("lo").alias("cluster_id")
-        )
-        # node universe from the raw pairs (not `canon`) so a degenerate
-        # self-pair still yields its singleton cluster row
-        roots = (
-            pairs.select(F.col(a_col).cast("long").alias("doc_id"))
-            .unionAll(pairs.select(F.col(b_col).cast("long").alias("doc_id")))
-            .distinct()
-            .join(members, "doc_id", "left_anti")
-            .select("doc_id", F.col("doc_id").alias("cluster_id"))
-        )
-        return members.unionByName(roots).select(
-            "doc_id",
-            "cluster_id",
-            (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-        )
     edges = (
         pairs.select(
             F.col(a_col).cast("long").alias("src"),
@@ -714,7 +606,7 @@ def duplicate_clusters(
         .agg(F.least(F.first("src"), F.min("dst")).alias("label"))
         .localCheckpoint()
     )
-    for _ in range(max_iters):
+    while True:
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")

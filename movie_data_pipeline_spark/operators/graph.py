@@ -3,8 +3,8 @@ operator family beside connected components (``dedup.py::
 duplicate_clusters``), with the same execution discipline: the driver
 loop iterates ROUNDS (a fixed, small count), every round is pure
 DataFrame algebra (one rank⋈edges shuffle + one groupBy(dst) shuffle),
-and ``localCheckpoint`` cuts lineage each round so plans don't
-snowball across iterations.
+and ``localCheckpoint`` cuts lineage every round or two so plans
+don't snowball across iterations.
 
 Semantics: standard damped PageRank on a directed edge list,
 ``r' = (1−d) + d·(Σ_in contrib + dangling_mass/N)`` with ranks summing
@@ -12,7 +12,8 @@ to N (node-count normalization, the convention where an isolated node
 scores exactly 1). Dangling mass (rank parked on nodes with no
 out-edges) is redistributed uniformly each round, so Σ ranks = N is an
 INVARIANT in exact arithmetic — the conservation law the verification
-gate pins, floats allowed a 1e-6·N tolerance.
+gate pins, floats allowed a 1e-6·N tolerance. ``pagerank(…,
+sources=…)`` is the personalized form of the same loop (Σ ranks = 1).
 
 Scale posture: ranks and degrees are (node, value) tables partitioned
 by node; edges shuffle once per round on src then once on dst — the
@@ -29,6 +30,17 @@ from pyspark.sql import functions as F
 from ..session import shuffle_parallelism
 
 
+# Rounds per eager lineage-cutting checkpoint in the PageRank loop.
+# The checkpoint exists to truncate lineage (and its eagerness drives
+# one Spark job per batch), so checkpointing every round pays n_iter
+# scheduling/materialization overheads where ⌈n_iter/2⌉ suffice — the
+# per-round SHUFFLE count is unchanged, only job boundaries move.
+# Values beyond ~3 stop paying: plan depth per job grows linearly and
+# codegen/analysis time eats the savings (measured 1 → 6.16 s,
+# 2 → 5.15 s, 3 → 5.42 s at sf0.1, BASELINE.md).
+_PAGERANK_CKPT_EVERY = 2
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -36,20 +48,25 @@ def pagerank(
     damping: float = 0.85,
     n_iter: int = 10,
     weight: str | None = None,
-    ckpt_every: int = 2,
+    sources: DataFrame | None = None,
 ) -> DataFrame:
     """Ranks for every node appearing in ``edges`` (either endpoint),
-    after ``n_iter`` synchronous power-iteration rounds from the
-    uniform start (rank 1 per node). Returns (node, rank).
+    after ``n_iter`` synchronous power-iteration rounds. Returns
+    (node, rank).
 
-    ``ckpt_every`` batches that many rounds into one eager
-    localCheckpoint job: the checkpoint exists to truncate lineage
-    (and its eagerness drives one Spark job per batch), so
-    checkpointing every round pays n_iter scheduling/materialization
-    overheads where ⌈n_iter/ckpt_every⌉ suffice — the per-round
-    SHUFFLE count is unchanged, only job boundaries move. Values
-    beyond ~3 stop paying: plan depth per job grows linearly and
-    codegen/analysis time eats the savings.
+    Every round is ``r' = (1−d)·t + d·(Σ_in contrib + dmass·t/Σt)``
+    for a teleport vector t; dangling mass (rank parked on nodes with
+    no out-edges) lands on t's support, so Σ ranks = Σt is conserved
+    and the iteration starts from r = t.
+
+    - ``sources=None``: t ≡ 1, the node-count convention (Σ ranks =
+      N, an isolated node scores exactly 1).
+    - ``sources`` given: personalized PageRank (Jeh & Widom WWW'03
+      random-surfer form) — t = 1/|S| on the source set S and 0
+      elsewhere, so Σ ranks = 1 and rank measures proximity to the
+      sources. ``sources`` is a 1-column DataFrame of node ids; ids
+      absent from the graph are ignored (they could never receive
+      mass), and a ValueError is raised when none appears.
 
     Parallel edges are legitimate weight (each contributes its own
     share); callers wanting simple-graph semantics should distinct()
@@ -58,8 +75,10 @@ def pagerank(
     out-edges proportionally — contrib = rank·w / W_out(src), the
     weighted power iteration. The unweighted path is the w ≡ 1
     special case of the same dataflow (out-strength = out-degree), so
-    conservation (Σ ranks = N with dangling redistribution) holds
-    identically.
+    conservation holds identically.
+
+    Lineage is cut by one eager localCheckpoint every
+    ``_PAGERANK_CKPT_EVERY`` rounds and on the last round.
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
@@ -105,133 +124,52 @@ def pagerank(
     # dangling); both join inputs are already hash-partitioned on the
     # key (distinct on node / groupBy on pre-partitioned src), and the
     # left join's output keeps the node partitioning the rounds need
-    base = nodes.join(out_deg, nodes.node == out_deg.src, "left").select(
-        "node", "deg"
-    ).localCheckpoint()
-    # one bounded 2-scalar probe: node count + dangling-node count.
-    # When the graph has NO dangling nodes — true for every
-    # symmetrized edge list (both directions present ⇒ every node has
-    # an out-edge), e.g. the whole trade-graph family — dmass is
-    # EXACTLY 0.0 every round, so the per-round dangling aggregation
-    # and its 1-row crossJoin are dead weight: each one re-executes
-    # the un-checkpointed ranks lineage a second time per round and
-    # adds an exchange + broadcast. Skipping the term is bit-exact
-    # (x + 0.0·anything ≡ x for the non-negative contribs here); the
-    # dangling path is unchanged when n_dangling > 0.
+    base = nodes.join(out_deg, nodes.node == out_deg.src, "left")
+    if sources is None:
+        base = base.select("node", "deg")
+        members = F.lit(1)
+    else:
+        s = sources.select(
+            F.col(sources.columns[0]).cast("long").alias("node")
+        ).distinct()
+        base = base.join(
+            s.withColumn("_is_src", F.lit(True)), "node", "left"
+        ).select(
+            "node", "deg", F.coalesce("_is_src", F.lit(False)).alias("is_src")
+        )
+        members = F.when(F.col("is_src"), 1)
+    base = base.localCheckpoint()
+    # one bounded 2-scalar probe: teleport-support size (N, or the
+    # sources present) + dangling-node count. When the graph has NO
+    # dangling nodes — true for every symmetrized edge list (both
+    # directions present ⇒ every node has an out-edge), e.g. the whole
+    # trade-graph family — dmass is EXACTLY 0.0 every round, so the
+    # per-round dangling aggregation and its 1-row crossJoin are dead
+    # weight: each one re-executes the un-checkpointed ranks lineage a
+    # second time per round and adds an exchange + broadcast. Skipping
+    # the term is bit-exact (x + 0.0·anything ≡ x for the non-negative
+    # contribs here); the dangling path is unchanged when
+    # n_dangling > 0.
     probe = base.agg(
-        F.count(F.lit(1)).alias("n"),
+        F.count(members).alias("n"),
         F.count(F.when(F.col("deg").isNull(), 1)).alias("nd"),
     ).first()
-    n_nodes, n_dangling = probe["n"], probe["nd"]
-
-    ranks = base.select("node", F.lit(1.0).alias("rank"), "deg")
-    for it in range(n_iter):
-        contrib = (
-            ranks.join(e, ranks.node == e.src)
-            .select(
-                "dst", (F.col("rank") * F.col("w") / F.col("deg")).alias("c")
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks = base.join(contrib, base.node == contrib.dst, "left")
-        if n_dangling:
-            dangling = ranks.filter(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass")
-            )
-            new_ranks = new_ranks.crossJoin(dangling)  # 1-row side
-            mass = F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col(
-                "dmass"
-            ) / F.lit(float(n_nodes))
-        else:
-            mass = F.coalesce(F.col("contrib"), F.lit(0.0))
-        ranks = new_ranks.select(
-            "node",
-            (F.lit(1.0 - damping) + F.lit(damping) * mass).alias("rank"),
-            "deg",
-        )
-        if it % ckpt_every == ckpt_every - 1 or it == n_iter - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks.select("node", "rank")
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    sources: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    n_iter: int = 10,
-    weight: str | None = None,
-    ckpt_every: int = 2,
-) -> DataFrame:
-    """Personalized PageRank (Jeh & Widom WWW'03 random-surfer form):
-    teleportation lands uniformly on the SOURCE set instead of the
-    whole graph, so rank measures proximity to the sources. Returns
-    (node, rank) with Σ ranks = 1 (probability convention — dangling
-    mass also teleports to the sources, keeping the chain stochastic).
-
-    Same execution discipline as ``pagerank``: per-round keyed
-    shuffles linear in |E|, lineage truncated every ``ckpt_every``
-    rounds (one eager job per batch — see pagerank's docstring for
-    why 2 is the sweet spot), the only driver values are 1-row
-    aggregates and the bounded node/source counts. ``sources`` is a 1-column DataFrame of node ids; ids
-    absent from the graph are ignored (they could never receive
-    mass)."""
-    if not 0.0 < damping < 1.0:
-        raise ValueError(f"damping must be in (0, 1), got {damping}")
-    if n_iter < 1:
-        raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    w_col = (
-        F.col(weight).cast("double") if weight else F.lit(1.0)
-    ).alias("w")
-    # same setup-time co-partitioning as pagerank/hits: edges keyed by
-    # src once, so the per-round score join is exchange-free
-    npart = shuffle_parallelism(edges.sparkSession)
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-            w_col,
-        )
-        # NULL / zero / negative weights carry no mass by definition;
-        # keeping them would make contrib compute rank*0/0 = NaN when
-        # a node's whole out-weight is 0 and silently poison every
-        # reachable rank. Dropped edges may demote a node to dangling
-        # (correct) or remove it from the graph entirely.
-        .filter(F.col("w") > 0)
-        .repartition(npart, "src")
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    out_deg = e.groupBy("src").agg(F.sum("w").alias("deg"))
-    s = sources.select(
-        F.col(sources.columns[0]).cast("long").alias("node")
-    ).distinct()
-    base = (
-        nodes.join(out_deg, nodes.node == out_deg.src, "left")
-        .join(s.withColumn("_is_src", F.lit(True)), "node", "left")
-        .select("node", "deg", F.coalesce("_is_src", F.lit(False)).alias("is_src"))
-        .localCheckpoint()
-    )
-    # bounded 2-scalar probe: source count + dangling-node count (the
-    # pagerank dead-dangling optimization — see pagerank above; with
-    # zero dangling nodes dmass·tele ≡ 0.0 exactly, so the per-round
-    # dangling aggregate + crossJoin are skipped bit-exactly).
-    probe = base.agg(
-        F.count(F.when(F.col("is_src"), 1)).alias("ns"),
-        F.count(F.when(F.col("deg").isNull(), 1)).alias("nd"),
-    ).first()
-    n_src, n_dangling = probe["ns"], probe["nd"]
-    if n_src == 0:
+    n_members, n_dangling = probe["n"], probe["nd"]
+    # (tele, tele_sum) chosen so each round's arithmetic is bit-for-bit
+    # the classical form: (1−d)·1.0 ≡ (1−d) and dmass·1.0/N ≡ dmass/N
+    # for t ≡ 1; dmass·t/1.0 ≡ dmass·t for the personalized vector
+    if sources is None:
+        tele, tele_sum = F.lit(1.0), float(n_members)
+    elif n_members == 0:
         raise ValueError("no source id appears in the graph")
-    tele = F.when(F.col("is_src"), F.lit(1.0 / n_src)).otherwise(F.lit(0.0))
+    else:
+        tele = F.when(F.col("is_src"), F.lit(1.0 / n_members)).otherwise(
+            F.lit(0.0)
+        )
+        tele_sum = 1.0
+    carry = base.columns[1:]  # deg (+ is_src, which tele reads)
 
-    ranks = base.select("node", tele.alias("rank"), "deg", "is_src")
+    ranks = base.select("node", tele.alias("rank"), *carry)
     for it in range(n_iter):
         contrib = (
             ranks.join(e, ranks.node == e.src)
@@ -242,26 +180,22 @@ def personalized_pagerank(
             .agg(F.sum("c").alias("contrib"))
         )
         new_ranks = base.join(contrib, base.node == contrib.dst, "left")
+        mass = F.coalesce(F.col("contrib"), F.lit(0.0))
         if n_dangling:
             dangling = ranks.filter(F.col("deg").isNull()).agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass")
             )
             new_ranks = new_ranks.crossJoin(dangling)  # 1-row side
-            mass = (
-                F.coalesce(F.col("contrib"), F.lit(0.0))
-                + F.col("dmass") * tele
-            )
-        else:
-            mass = F.coalesce(F.col("contrib"), F.lit(0.0))
+            mass = mass + F.col("dmass") * tele / F.lit(tele_sum)
         ranks = new_ranks.select(
             "node",
-            (F.lit(1.0 - damping) * tele + F.lit(damping) * mass).alias(
-                "rank"
-            ),
-            "deg",
-            "is_src",
+            (F.lit(1.0 - damping) * tele + F.lit(damping) * mass).alias("rank"),
+            *carry,
         )
-        if it % ckpt_every == ckpt_every - 1 or it == n_iter - 1:
+        if (
+            it % _PAGERANK_CKPT_EVERY == _PAGERANK_CKPT_EVERY - 1
+            or it == n_iter - 1
+        ):
             ranks = ranks.localCheckpoint()
     return ranks.select("node", "rank")
 
@@ -424,45 +358,43 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
     )
 
 
+# HITS L2-normalizes every _HITS_NORM_EVERY rounds and on the last
+# round. Power iteration is scale-invariant, so the per-round
+# normalization exists only to keep magnitudes inside double range —
+# normalizing every k rounds (the final round always normalizes, so
+# the returned scores are unit-L2 either way) yields the identical
+# direction. Measured at sf0.1 (n_iter=10, min-of-2 warmed):
+# every-round 10.5 s, every-5 9.3 s, end-only 8.5 s, with end-only
+# final scores agreeing with every-round to 1.3e-16 — the two
+# aggregate+broadcast subtrees per round are ~19% of the wall.
+# Overflow bound: safe while λ^10 < 1e308 for λ the graph's dominant
+# eigenvalue (≈ a generous hub-degree bound), i.e. λ up to 1e30.
+_HITS_NORM_EVERY = 10
+
+
 def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
-         n_iter: int = 10, normalize_every: int = 1) -> DataFrame:
+         n_iter: int = 10) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) on a directed edge
     list: authority(v) accumulates the hub mass of its in-neighbors,
-    hub(u) accumulates the authority mass of its out-neighbors, each
-    L2-normalized per round. Returns (node, hub, authority) for every
+    hub(u) accumulates the authority mass of its out-neighbors, with
+    both score vectors L2-normalized every ``_HITS_NORM_EVERY`` rounds
+    and on the last round. Returns (node, hub, authority) for every
     node on either endpoint; on a bipartite purchase graph hubs rank
     the buyers and authorities the suppliers.
 
-    Same execution discipline as ``pagerank`` EXCEPT the lineage
-    cut stays per-round — and on NON-NORM rounds one checkpoint per
-    round, not two (r14): auth's only within-round consumer there is
-    the hub join, so the round's single hub checkpoint job computes
-    the auth subtree in-line (same shuffle count, half the eager-job
-    overhead). On norm rounds auth is still checkpointed separately
-    (it feeds both the norm aggregate and the hub join), so at
-    normalize_every=1 every round keeps two checkpoints — the saving
-    applies to the end-only-normalization configuration the registry
-    uses (r14 ADVICE). Multi-ROUND batching
-    remains rejected: it re-executes the shared un-checkpointed chain
+    Lineage is cut every round, and on NON-NORM rounds with one
+    checkpoint per round, not two (r14): auth's only within-round
+    consumer there is the hub join, so the round's single hub
+    checkpoint job computes the auth subtree in-line (same shuffle
+    count, half the eager-job overhead). On norm rounds auth is
+    checkpointed separately (it feeds both the norm aggregate and the
+    hub join). Multi-ROUND batching (the PageRank cadence) remains
+    rejected: it re-executes the shared un-checkpointed chain
     through the per-round norm crossJoins — measured 8.4 s -> 12.3 s
     at sf0.1. The only driver-bound data is the 1-row L2 norm joined
     back through the bounded-crossJoin pattern. Scores are floats whose low bits ride partition-sum order
     → rows-only in the registry; the gate pins the L2-norm invariants
     and exact graph cardinalities.
-
-    ``normalize_every``: power iteration is scale-invariant, so the
-    per-round L2 normalization exists only to keep magnitudes inside
-    double range — mathematically, normalizing every k rounds (the
-    final round always normalizes, so the returned scores are unit-L2
-    either way) yields the identical direction. Measured at sf0.1
-    (n_iter=10, min-of-2 warmed): every-round 10.5 s, every-5 9.3 s,
-    end-only 8.5 s, with end-only final scores agreeing with
-    every-round to 1.3e-16 — the two aggregate+broadcast subtrees per
-    round are ~19% of the wall. Overflow bound: safe while
-    λ^normalize_every < 1e308 for λ the graph's dominant eigenvalue
-    (≈ a generous hub-degree bound), i.e. any normalize_every ≤ 10
-    covers λ up to 1e30. Default 1 keeps the classical per-round
-    semantics; the registry entry opts into end-only.
 
     Shuffle discipline (r6 verdict item 4): the edge relation is
     checkpointed TWICE up front — hash-partitioned by src and by dst
@@ -516,10 +448,8 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     # norm, so dropping them mid-iteration is semantics-preserving and
     # saves two node-restoring joins per round; the final select
     # reinstates them at 0.
-    if normalize_every < 1:
-        raise ValueError(f"normalize_every must be >= 1, got {normalize_every}")
     for i in range(n_iter):
-        do_norm = ((i + 1) % normalize_every == 0) or (i == n_iter - 1)
+        do_norm = ((i + 1) % _HITS_NORM_EVERY == 0) or (i == n_iter - 1)
         auth = (
             e_by_src.join(hub, e_by_src.src == hub.node)
             .groupBy(F.col("dst").alias("node"))

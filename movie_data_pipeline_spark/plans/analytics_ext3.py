@@ -977,11 +977,11 @@ def q22_waiting_wealth(spark: SparkSession, sf: str) -> DataFrame:
     customer = load_table(spark, sf, "customer")
     orders = load_table(spark, sf, "orders")
 
-    from .analytics import _dec_sum
+    from .helpers import dec_sum
 
     pos = customer.filter(F.col("c_acctbal") > 0)
     avg_bal = pos.agg(
-        (_dec_sum(F.col("c_acctbal"), 6).cast("double") / F.count(F.lit(1)))
+        (dec_sum(F.col("c_acctbal"), 6).cast("double") / F.count(F.lit(1)))
         .alias("threshold")
     )
     # "lapsed": no order inside the trailing 90 days of the order
@@ -1006,7 +1006,7 @@ def q22_waiting_wealth(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_cust"),
             (
-                F.round(_dec_sum(F.col("c_acctbal"), 6).cast("double"), 2)
+                F.round(dec_sum(F.col("c_acctbal"), 6).cast("double"), 2)
                 + 0.0
             ).alias("total_bal"),
         )

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from ..operators.ranks import constant_partition_key
+from .helpers import dec_sum
 
 # window length (tokens) for exact repeated-span detection; spans are
 # maximal unions of overlapping duplicated windows, so the MINIMUM
@@ -45,12 +46,6 @@ _SPAN_L = 8
 
 # DSIR hashed-feature space size (buckets); two md5 hex chars.
 _DSIR_B = 256
-
-
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    """Partition-order-independent sum (plans/analytics.py::_dec_sum
-    discipline, redefined locally for import-order independence)."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
 
 
 # ---------------------------------------------------------------------------
@@ -348,7 +343,7 @@ def dsir_importance_weights(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.sum("n").alias("n_ngrams"),
             F.round(
-                _dec_sum(
+                dec_sum(
                     F.col("n").cast("decimal(18,0)")
                     * F.col("lr").cast("decimal(18,6)"),
                     6,
@@ -715,7 +710,7 @@ def score_calibration_bins(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(
-                _dec_sum(F.col("score")).cast("double") / F.count(F.lit(1)), 6
+                dec_sum(F.col("score")).cast("double") / F.count(F.lit(1)), 6
             ).alias("mean_score"),
             F.round(F.sum("pos") / F.count(F.lit(1)), 6).alias("pos_rate"),
         )
@@ -882,7 +877,7 @@ def score_auc(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(1 - F.col("pos")).alias("n_neg"),
         F.round(
             (
-                _dec_sum(F.when(F.col("pos") == 1, F.col("midrank"))).cast(
+                dec_sum(F.when(F.col("pos") == 1, F.col("midrank"))).cast(
                     "double"
                 )
                 - (F.sum("pos") * (F.sum("pos") + 1)) / 2.0

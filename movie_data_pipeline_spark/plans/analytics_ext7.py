@@ -37,12 +37,7 @@ from pyspark.sql import functions as F
 
 from ..operators.ranks import constant_partition_key
 from ..sources.catalog import load_table
-
-
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    """Partition-order-independent sum (plans/analytics.py::_dec_sum
-    discipline, redefined locally for import-order independence)."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
+from .helpers import dec_sum
 
 
 # ---------------------------------------------------------------------------
@@ -403,7 +398,7 @@ def score_ndcg(spark: SparkSession, sf: str) -> DataFrame:
             F.round(
                 F.col("gain") * _pos_weight(F.row_number().over(w)), 6
             ).alias("term")
-        ).agg(F.round(_dec_sum(F.col("term")).cast("double"), 6).alias("v"))
+        ).agg(F.round(dec_sum(F.col("term")).cast("double"), 6).alias("v"))
 
     model = dcg(s, F.desc("score"), F.asc("vec_id"))
     ideal = dcg(s, F.desc("label"), F.asc("vec_id"))

@@ -297,12 +297,12 @@ def trade_hits(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.graph import hits
 
     pairs = _trade_pairs(spark, sf)
-    # end-only normalization: scale-invariant, measured -19% wall at
-    # sf0.1 (operators/graph.py::hits docstring A/B); overflow bound
-    # holds for any plausible trade-graph eigenvalue
+    # at n_iter=10 hits normalizes end-only: scale-invariant, measured
+    # -19% wall at sf0.1 (operators/graph.py::_HITS_NORM_EVERY); the
+    # overflow bound holds for any plausible trade-graph eigenvalue
     return hits(
         pairs.select(F.col("cust").alias("src"), F.col("supp").alias("dst")),
-        n_iter=10, normalize_every=10,
+        n_iter=10,
     ).sortWithinPartitions("node")
 
 
@@ -312,7 +312,7 @@ def hits_check(spark: SparkSession, sf: str) -> DataFrame:
     pairs = _trade_pairs(spark, sf)
     scores = hits(
         pairs.select(F.col("cust").alias("src"), F.col("supp").alias("dst")),
-        n_iter=10, normalize_every=10,
+        n_iter=10,
     )
     stats = scores.agg(
         F.count(F.lit(1)).alias("n_nodes"),
@@ -428,26 +428,26 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM nodes) AS n_nodes,
 # ---------------------------------------------------------------------------
 
 def trade_ppr_nation0(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.graph import personalized_pagerank
+    from ..operators.graph import pagerank
 
     cust = load_table(spark, sf, "customer")
     sources = cust.filter(F.col("c_nationkey") == 0).select(
         F.col("c_custkey").alias("node")
     )
-    return personalized_pagerank(
-        _trade_edges(spark, sf), sources, n_iter=10
+    return pagerank(
+        _trade_edges(spark, sf), n_iter=10, sources=sources
     ).sortWithinPartitions("node")
 
 
 def ppr_check(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.graph import personalized_pagerank
+    from ..operators.graph import pagerank
 
     edges = _trade_edges(spark, sf)
     cust = load_table(spark, sf, "customer")
     sources = cust.filter(F.col("c_nationkey") == 0).select(
         F.col("c_custkey").alias("node")
     )
-    ranks = personalized_pagerank(edges, sources, n_iter=10)
+    ranks = pagerank(edges, n_iter=10, sources=sources)
     src_mass = ranks.join(sources, "node", "left_semi").agg(
         F.coalesce(F.sum("rank"), F.lit(0.0)).alias("src_mass")
     )

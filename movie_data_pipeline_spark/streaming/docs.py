@@ -88,10 +88,10 @@ def _cached_index_parts(
 ) -> DataFrame | None:
     """Union of the index's batch_id=* partitions except
     ``exclude_batch_id``, served from per-partition persisted
-    DataFrames re-read only on signature change. Returns None when no
-    partition dir exists (caller treats as empty index) OR when the
-    dir count exceeds the cache bound (caller falls back to the plain
-    root read)."""
+    DataFrames re-read only on signature change. Returns None — the
+    caller then falls back to the plain root read — when no partition
+    dir exists, when ``index_path`` cannot be listed (missing, or not a
+    directory), or when the dir count exceeds the cache bound."""
     app_id = spark.sparkContext.applicationId
     for k in [k for k in _INDEX_PART_CACHE if k[0] != app_id]:
         _INDEX_PART_CACHE.pop(k)  # dead-session handles: just drop
@@ -103,7 +103,7 @@ def _cached_index_parts(
             for name in os.listdir(index_path)
             if name.startswith("batch_id=")
         }
-    except FileNotFoundError:
+    except OSError:  # missing root, or a path that is not a directory
         dirs = {}
     if not dirs or len(dirs) > _INDEX_CACHE_MAX_DIRS:
         # beyond the bound the packed root scan wins (measured) and

@@ -543,6 +543,10 @@ def test_parallel_multi_row_number_rejects_bad_specs(spark):
     clash = spark.createDataFrame([(1, 2)], ["_mrb0", "v"])
     with pytest.raises(ValueError, match="collide"):
         parallel_multi_row_number(clash, [("v", ["_mrb0"], "i")])
+    # no specs: a clear error at the API boundary, not an unrelated
+    # failure inside the bounds aggregate
+    with pytest.raises(ValueError, match="specs is empty"):
+        parallel_multi_row_number(df, [])
 
 
 def test_phrase_regexp_count_equals_array_form(spark):

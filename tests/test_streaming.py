@@ -1750,6 +1750,14 @@ def test_cached_index_parts_mtime_keyed(spark, tmp_path):
     assert SD._cached_index_parts(
         spark, str(tmp_path / "nope"), exclude_batch_id=0
     ) is None
+    # a root that cannot be listed (a regular file raises
+    # NotADirectoryError): None too, so the caller falls back to the
+    # plain root read instead of failing the stream
+    not_a_dir = tmp_path / "index_file"
+    not_a_dir.write_text("not an index")
+    assert SD._cached_index_parts(
+        spark, str(not_a_dir), exclude_batch_id=0
+    ) is None
 
 
 def test_cached_index_parts_bound_disables_cache(spark, tmp_path):

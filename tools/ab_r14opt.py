@@ -236,8 +236,8 @@ def _dsir_old(spark, sf):
     from movie_data_pipeline_spark.plans.analytics_ext6 import (
         _BUCKET_EXPR,
         _DSIR_B,
-        _dec_sum,
     )
+    from movie_data_pipeline_spark.plans.helpers import dec_sum
     from movie_data_pipeline_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf, "documents")
@@ -283,7 +283,7 @@ def _dsir_old(spark, sf):
         .agg(
             F.sum("n").alias("n_ngrams"),
             F.round(
-                _dec_sum(
+                dec_sum(
                     F.col("n").cast("decimal(18,0)") * F.col("lr").cast("decimal(18,6)"), 6
                 ).cast("double"),
                 6,

@@ -162,7 +162,7 @@ def _rfm_old(spark, sf):
 
 def _decile_old(spark, sf):
     from movie_data_pipeline_spark.operators.ranks import ntile_expr
-    from movie_data_pipeline_spark.plans.stats import _dec_sum
+    from movie_data_pipeline_spark.plans.helpers import dec_sum
     from movie_data_pipeline_spark.sources.catalog import load_table
 
     li = load_table(spark, sf, "lineitem")
@@ -179,7 +179,7 @@ def _decile_old(spark, sf):
             F.round(F.min("l_extendedprice"), 2).alias("lo_price"),
             F.round(F.max("l_extendedprice"), 2).alias("hi_price"),
             F.round(
-                _dec_sum(F.col("l_extendedprice"), 6).cast("double")
+                dec_sum(F.col("l_extendedprice"), 6).cast("double")
                 / F.count(F.lit(1)),
                 4,
             ).alias("mean_price"),
@@ -191,7 +191,7 @@ def _decile_old(spark, sf):
 
 
 def _winsor_old(spark, sf):
-    from movie_data_pipeline_spark.plans.stats import _dec_sum
+    from movie_data_pipeline_spark.plans.helpers import dec_sum
     from movie_data_pipeline_spark.sources.catalog import load_table
 
     li = load_table(spark, sf, "lineitem").select(
@@ -211,7 +211,7 @@ def _winsor_old(spark, sf):
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.round(
-                _dec_sum(F.col("wp"), 6).cast("double") / F.count(F.lit(1)),
+                dec_sum(F.col("wp"), 6).cast("double") / F.count(F.lit(1)),
                 4,
             ).alias("winsor_mean"),
             F.round(F.min("wp"), 4).alias("winsor_min"),
@@ -357,7 +357,7 @@ def _charlm_rle(spark, sf):
     1-based positions where the gram changes), and explode the already
     -counted (g3, n) pairs — no corpus-sized hash aggregate, no
     exchange before the persisted count relation."""
-    from movie_data_pipeline_spark.plans.analytics import _dec_sum
+    from movie_data_pipeline_spark.plans.helpers import dec_sum
     from movie_data_pipeline_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf, "documents")
@@ -409,7 +409,7 @@ def _charlm_rle(spark, sf):
         F.sum("n").alias("n_grams"),
         (
             F.round(
-                -_dec_sum(F.col("lp") * F.col("n"), 6).cast("double")
+                -dec_sum(F.col("lp") * F.col("n"), 6).cast("double")
                 / F.sum("n"),
                 4,
             )
