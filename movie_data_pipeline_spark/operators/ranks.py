@@ -73,7 +73,7 @@ _NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
 
 # how many exact 6-byte string images the tiebreak refinement chains
 # through (covers shared prefixes up to 6×this bytes; beyond that a
-# hot bucket stalls at max_levels — visibly, via LAST_SPLIT_STATS)
+# hot bucket stalls at max_levels — visibly, via ``stats_out``)
 _N_STRING_IMAGES = 5
 
 # helper columns the decomposition appends and the callers drop.
@@ -86,36 +86,6 @@ _HELPER_COLS = (
 ) + tuple(
     f"_m{k}{ab}" for k in range(_N_STRING_IMAGES) for ab in ("a", "b")
 )
-
-# Observability for the adaptive skew split (the split is load-bearing
-# under 10+ registry entries and was previously silent): refreshed by
-# every _adaptive_buckets call with per-level hot-bucket counts and
-# max bucket widths, so stress runs / property tests can SEE a
-# pathological distribution re-split instead of inferring it from
-# wall time. Same-dict update so importers holding a reference see it.
-# CONTRACT: LAST_SPLIT_STATS only exposes the MOST RECENT call — a plan
-# chaining several rank operators overwrites it per call. Multi-call
-# consumers read SPLIT_STATS_LOG (one fresh dict per call, most recent
-# last, bounded) or pass ``stats_out`` to the public operators.
-LAST_SPLIT_STATS: dict = {}
-SPLIT_STATS_LOG: list = []
-_SPLIT_STATS_LOG_MAX = 64
-
-
-def _finalize_stats(call_stats: dict, max_width: int, stats_out) -> None:
-    """Seal one _adaptive_buckets call's stats: record the final max
-    bucket width, append the per-call dict to SPLIT_STATS_LOG (bounded)
-    and copy into the caller-supplied ``stats_out`` when given, so
-    observability survives plans that invoke several rank operators
-    (LAST_SPLIT_STATS alone only shows the most recent call)."""
-    call_stats["final_max_width"] = max_width
-    LAST_SPLIT_STATS["final_max_width"] = max_width
-    SPLIT_STATS_LOG.append(call_stats)
-    del SPLIT_STATS_LOG[:-_SPLIT_STATS_LOG_MAX]
-    if stats_out is not None:
-        stats_out.clear()
-        stats_out.update(call_stats)
-
 
 def _reject_helper_collisions(df: DataFrame, fn: str) -> None:
     clash = sorted(set(df.columns) & set(_HELPER_COLS))
@@ -245,8 +215,12 @@ def _adaptive_buckets(
     (tiebreak split) — hence max_levels=3 by default. A slice equal
     in value and every tiebreak image (strings sharing a
     >6×_N_STRING_IMAGES-byte prefix) never shrinks; max_levels bounds
-    the loop and LAST_SPLIT_STATS reports the final width so a stall
+    the loop and ``stats_out`` reports the final width so a stall
     is VISIBLE, not inferred from wall time.
+
+    ``stats_out``, when given, is cleared and filled with this call's
+    split stats: ``grouped``, ``nbuckets``, ``levels`` (per level, the
+    hot-bucket count and max bucket width) and ``final_max_width``.
 
     NULL order keys get a dedicated lowest bucket (id -1), matching
     the in-bucket sort's NULLS FIRST — the operator implements
@@ -274,15 +248,13 @@ def _adaptive_buckets(
     b = b.localCheckpoint()
     imgs = _mono_images(df, tiebreaks[0]) if tiebreaks else []
     split_log: list[dict] = []
-    call_stats: dict = {
-        "grouped": bool(part), "nbuckets": nbuckets, "levels": split_log,
-    }
-    LAST_SPLIT_STATS.clear()
-    LAST_SPLIT_STATS.update(call_stats)  # live view of the current call
+    call_stats = {} if stats_out is None else stats_out
+    call_stats.clear()
+    call_stats.update(grouped=bool(part), nbuckets=nbuckets, levels=split_log)
     if not part:
         return _refine_ungrouped(
             df, b, val_d, imgs, nbuckets, hot_factor,
-            split_floor, max_levels, call_stats, stats_out,
+            split_floor, max_levels, call_stats,
         )
     for _level in range(max_levels):
         stats = (
@@ -317,7 +289,7 @@ def _adaptive_buckets(
             {"level": _level, "hot": n_hot, "max_width": max_width}
         )
         if n_hot == 0 or _level == max_levels - 1:
-            _finalize_stats(call_stats, max_width, stats_out)
+            call_stats["final_max_width"] = max_width
             prefix_w = (
                 Window.partitionBy(*part)
                 .orderBy("_b")
@@ -423,7 +395,6 @@ def _refine_ungrouped(
     split_floor: int,
     max_levels: int,
     call_stats: dict,
-    stats_out: dict | None,
 ):
     """Driver-stats refinement for the ungrouped case (see
     _adaptive_buckets docstring): collect the bounded per-bucket stats,
@@ -457,7 +428,7 @@ def _refine_ungrouped(
             {"level": _level, "hot": len(hot_ids), "max_width": max_width}
         )
         if not hot_ids or _level == max_levels - 1:
-            _finalize_stats(call_stats, max_width, stats_out)
+            call_stats["final_max_width"] = max_width
             if _level == 0:
                 # level-0 bucket ids are DENSE (-1..nbuckets-1), so the
                 # exclusive prefix is a plain array literal indexed by
@@ -548,8 +519,8 @@ def parallel_row_number(
     for the result to be well-defined. A bucket only splits when it
     holds more than max(split_floor, hot_factor·n/nbuckets) rows —
     the floor keeps test-scale data on the one-level plan.
-    ``stats_out``: optional dict filled with THIS call's split stats
-    (LAST_SPLIT_STATS only survives until the next rank call)."""
+    ``stats_out``: optional dict filled with this call's split stats
+    (see _adaptive_buckets)."""
     _reject_helper_collisions(df, "parallel_row_number")
     part = list(part_cols)
     b, prefix = _adaptive_buckets(
@@ -606,7 +577,11 @@ def parallel_multi_row_number(
     back to the proven adaptive-refinement path via a chained
     parallel_row_number call — skew pays for refinement only where it
     exists, and the fused fast path stays byte-identical to the
-    one-level plan."""
+    one-level plan.
+
+    ``stats_out``, when given, is cleared and filled with ``fused``,
+    ``nbuckets``, ``total_rows`` and ``per_spec`` (one dict per spec;
+    a fallback spec also carries its chained call's ``split_stats``)."""
     _reject_helper_collisions(df, "parallel_multi_row_number")
     specs = [
         (value_col, list(tiebreaks), out_col)
@@ -678,21 +653,23 @@ def parallel_multi_row_number(
         per_metric[r["m"]][r["bk"]] = r["c"]
     total = sum(per_metric[0].values()) if specs else 0
     thr = _hot_threshold(total, nbuckets, hot_factor, split_floor)
-    call_stats: dict = {
-        "fused": len(specs), "nbuckets": nbuckets, "total_rows": total,
-        "per_spec": [],
-    }
+    call_stats = {} if stats_out is None else stats_out
+    call_stats.clear()
+    call_stats.update(
+        fused=len(specs), nbuckets=nbuckets, total_rows=total, per_spec=[]
+    )
     out = b
     fallback: list[tuple] = []
     for i, (vc, tb, oc) in enumerate(specs):
         counts = per_metric[i]
         max_width = max(counts.values()) if counts else 0
         hot = any(c > thr for c in counts.values())
-        call_stats["per_spec"].append(
-            {"out_col": oc, "max_width": max_width, "fallback": hot}
-        )
+        spec_stats = {"out_col": oc, "max_width": max_width, "fallback": hot}
+        call_stats["per_spec"].append(spec_stats)
         if hot:
-            fallback.append((vc, tb, oc))
+            # the fallback's own split stats stay observable on its spec
+            spec_stats["split_stats"] = {}
+            fallback.append((vc, tb, oc, spec_stats["split_stats"]))
             continue
         rows = [{"_b": k, "_bn": v} for k, v in counts.items()]
         pfx = _dense_prefix_list(rows, nbuckets)
@@ -705,21 +682,11 @@ def parallel_multi_row_number(
             ).cast("long"),
         )
     out = out.drop(*helper)
-    # record the fused call's stats BEFORE chaining the hot-metric
-    # fallbacks, so the log order is chronological (parent first, each
-    # fallback child after) and LAST_SPLIT_STATS keeps its "most
-    # recent rank call" contract when a fallback runs
-    LAST_SPLIT_STATS.clear()
-    LAST_SPLIT_STATS.update(call_stats)
-    SPLIT_STATS_LOG.append(call_stats)
-    del SPLIT_STATS_LOG[:-_SPLIT_STATS_LOG_MAX]
-    if stats_out is not None:
-        stats_out.clear()
-        stats_out.update(call_stats)
-    for vc, tb, oc in fallback:
+    for vc, tb, oc, split_stats in fallback:
         out = parallel_row_number(
             out, vc, tb, out_col=oc, nbuckets=nbuckets,
             hot_factor=hot_factor, split_floor=split_floor,
+            stats_out=split_stats,
         )
     return out
 

@@ -8,8 +8,30 @@ Python boundary, UTC session timezone for deterministic time semantics).
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(meminfo: str | None, env: Mapping[str, str] = os.environ) -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEMORY`` when set, else
+    min(16g, half of ``MemTotal`` in the given ``/proc/meminfo`` text)
+    in ``m`` units, or 16g when ``MemTotal`` is unknown. A fixed 16g
+    heap gets the JVM killed by the kernel on hosts with 16 GB or less."""
+    if "SPARK_DRIVER_MEMORY" in env:
+        return env["SPARK_DRIVER_MEMORY"]
+    for line in (meminfo or "").splitlines():
+        if line.startswith("MemTotal:"):
+            return f"{min(16 * 1024, int(line.split()[1]) // 2048)}m"
+    return "16g"
+
+
+def _read_meminfo() -> str | None:
+    try:
+        with open("/proc/meminfo") as f:
+            return f.read()
+    except OSError:
+        return None
 
 
 def get_spark(
@@ -19,9 +41,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
-    On a real cluster, master/memory come from spark-submit; everything
-    set here is cluster-safe.
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores)
+    and ``driver_memory`` sizes the driver heap. On a real cluster,
+    master/memory come from spark-submit; everything set here is
+    cluster-safe.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     master = f"local[{cpus}]" if cpus else "local[*]"
@@ -42,7 +65,7 @@ def get_spark(
         # serve COUNT/MIN/MAX-only scans from parquet footer statistics
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory(_read_meminfo()))
     )
     if extra_conf:
         for k, v in extra_conf.items():

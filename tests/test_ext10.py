@@ -348,15 +348,14 @@ def test_shared_prefix_strings_split_via_second_image(spark):
     prefix stalled the refinement (zero-width first image). The second
     exact image over bytes 7-12 must now spread it: bounded width AND
     exact ranks."""
-    from movie_data_pipeline_spark.operators.ranks import LAST_SPLIT_STATS
-
     n = 200
     rows = [(f"sharedprefix-{k:06d}", 1) for k in range(n)]
     df = spark.createDataFrame(rows, ["k", "v"])
+    stats: dict = {}
     got = {
         r.k: r.i
         for r in parallel_row_number(
-            df, "v", ["k"], nbuckets=8, split_floor=1
+            df, "v", ["k"], nbuckets=8, split_floor=1, stats_out=stats
         ).collect()
     }
     assert got == {f"sharedprefix-{k:06d}": k + 1 for k in range(n)}
@@ -365,24 +364,24 @@ def test_shared_prefix_strings_split_via_second_image(spark):
     # exceeds hot_factor*n/nbuckets (pre-fix the stall left width = n)
     assert width <= 4 * n / 8
     # observability: the reported final width matches the measured one
-    assert LAST_SPLIT_STATS["final_max_width"] == width
-    assert LAST_SPLIT_STATS["grouped"] is False
-    assert any(lvl["hot"] > 0 for lvl in LAST_SPLIT_STATS["levels"])
+    assert stats["final_max_width"] == width
+    assert stats["grouped"] is False
+    assert any(lvl["hot"] > 0 for lvl in stats["levels"])
 
 
 def test_split_stats_reported_for_grouped_path(spark):
-    from movie_data_pipeline_spark.operators.ranks import LAST_SPLIT_STATS
-
     rows = [("g", k, 7) for k in range(120)]
     df = spark.createDataFrame(rows, ["g", "k", "v"])
+    stats: dict = {}
     parallel_row_number(
-        df, "v", ["k"], part_cols=["g"], nbuckets=8, split_floor=1
+        df, "v", ["k"], part_cols=["g"], nbuckets=8, split_floor=1,
+        stats_out=stats,
     ).count()
-    assert LAST_SPLIT_STATS["grouped"] is True
-    assert LAST_SPLIT_STATS["levels"][0]["max_width"] == 120
+    assert stats["grouped"] is True
+    assert stats["levels"][0]["max_width"] == 120
     # contract bound: hot_factor * n / nbuckets = 4*120/8
-    assert LAST_SPLIT_STATS["final_max_width"] <= 60
-    assert any(lvl["hot"] > 0 for lvl in LAST_SPLIT_STATS["levels"])
+    assert stats["final_max_width"] <= 60
+    assert any(lvl["hot"] > 0 for lvl in stats["levels"])
 
 
 def test_grouped_rank_empty_input_returns_empty(spark):
@@ -404,15 +403,9 @@ def test_grouped_rank_empty_input_returns_empty(spark):
 
 
 def test_split_stats_log_survives_chained_calls(spark):
-    """Round-10 advisory: LAST_SPLIT_STATS is overwritten per call, so
-    a plan chaining two rank operators lost the first call's stats.
-    SPLIT_STATS_LOG keeps one dict per call (most recent last) and
-    stats_out= captures a specific call across later ones."""
-    from movie_data_pipeline_spark.operators.ranks import (
-        LAST_SPLIT_STATS,
-        SPLIT_STATS_LOG,
-    )
-
+    """Round-10 advisory: a plan chaining two rank operators must not
+    lose the first call's stats — stats_out= captures a specific call
+    across later ones."""
     grouped = spark.createDataFrame(
         [("g", k, 7) for k in range(40)], ["g", "k", "v"]
     )
@@ -426,15 +419,9 @@ def test_split_stats_log_survives_chained_calls(spark):
     ).count()
     assert first_stats["grouped"] is True
     parallel_row_number(flat, "v", ["k"], nbuckets=4).count()
-    # the global only shows the second call...
-    assert LAST_SPLIT_STATS["grouped"] is False
-    # ...but the captured dict and the log retain the first
+    # the captured dict retains the first call
     assert first_stats["grouped"] is True
     assert first_stats["final_max_width"] <= 40
-    assert len(SPLIT_STATS_LOG) >= 2
-    assert SPLIT_STATS_LOG[-1]["grouped"] is False
-    assert SPLIT_STATS_LOG[-2]["grouped"] is True
-    assert SPLIT_STATS_LOG[-2] == first_stats
 
 
 def test_parallel_multi_row_number_matches_sequential(spark):
@@ -512,6 +499,9 @@ def test_parallel_multi_row_number_hot_fallback(spark):
     by_spec = {s["out_col"]: s for s in stats["per_spec"]}
     assert by_spec["vi"]["fallback"] is True
     assert by_spec["wi"]["fallback"] is False
+    # the fallback's own split stats stay observable on its spec
+    assert by_spec["vi"]["split_stats"]["levels"][0]["hot"] > 0
+    assert "split_stats" not in by_spec["wi"]
     want_v = {
         k: i
         for i, (k, _v, _w) in enumerate(

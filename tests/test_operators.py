@@ -2228,6 +2228,19 @@ def test_shuffle_parallelism_fallback(spark):
     assert shuffle_parallelism(_Fake()) == 7
 
 
+def test_driver_memory_sized_from_host():
+    """The default driver heap is min(16g, MemTotal/2) in m units, so a
+    15 GB host no longer gets a 16g heap; SPARK_DRIVER_MEMORY wins."""
+    from movie_data_pipeline_spark.session import driver_memory
+
+    host_15g = "MemTotal:       15728640 kB\nMemFree:        1024 kB\n"
+    host_125g = "MemTotal:      131072000 kB\nMemFree:        1024 kB\n"
+    assert driver_memory(host_15g, {}) == "7680m"
+    assert driver_memory(host_125g, {}) == "16384m"
+    assert driver_memory(None, {}) == "16g"
+    assert driver_memory(host_15g, {"SPARK_DRIVER_MEMORY": "4g"}) == "4g"
+
+
 def test_asof_timestamp_columns_subsecond_precision(spark):
     """Round-10 advisory: timestamp-typed ts columns went through
     cast('long'), truncating to whole seconds — a forward match 0.1 s
